@@ -350,8 +350,12 @@ object Bench {
     // — so the gate can assert the generator's ×k ROW LAW next to the
     // time ratio. Rows are host-noise-immune: a plan/fixture regression
     // moves rows, a bad host window only moves seconds — exactly the
-    // adjudicator the r16 ambiguous sf10 readings lacked.
-    def observedQuery(q: String): ((SparkSession, String) => org.apache.spark.sql.DataFrame, () => Long) = {
+    // adjudicator the r16 ambiguous sf10 readings lacked. If the
+    // observation fails or times out, the row channel falls back to a
+    // direct count() of the query output on the same `dir` (a second,
+    // unmeasured execution) instead of recording -1, which would flip
+    // the gate red on a metrics hiccup rather than on a row-law break.
+    def observedQuery(q: String, dir: String): ((SparkSession, String) => org.apache.spark.sql.DataFrame, () => Long) = {
       val obs = org.apache.spark.sql.Observation()
       val fn = (s: SparkSession, d: String) =>
         SparkEntry.queries(q)(s, d).observe(obs,
@@ -364,12 +368,15 @@ object Bench {
             scala.concurrent.Future(obs.get)(
               scala.concurrent.ExecutionContext.global), 30.seconds)("rows")
             .asInstanceOf[Long]
-        } catch { case _: Throwable => -1L }
+        } catch { case _: Throwable =>
+          try SparkEntry.queries(q)(spark, dir).count()
+          catch { case _: Throwable => -1L }
+        }
       (fn, read)
     }
     def decadeRun(q: String): (Double, Long, Long, Long, Long) = {
       val (gc0, _) = gcTotals(); val (mf0, _, rss0) = procStat()
-      val (fn, rows) = observedQuery(q)
+      val (fn, rows) = observedQuery(q, decadeFixture)
       val t = runOnce(q, fn, decadeFixture)
       val n = rows()
       reclaimAfter(q, keepFixtures = false)
@@ -380,12 +387,12 @@ object Bench {
     val decadeMeasured: Option[(Boolean, Seq[DecadeRow])] =
       if (!decadeEnabled) None
       else try {
-        val generated = graft.tools.ProbeScaleDecade
+        val generated = ScaleDecade
           .ensureFixture(spark, sfDir, decadeFixture, 10)
-        Some((generated, graft.tools.ProbeScaleDecade.Queries.map { q =>
+        Some((generated, ScaleDecade.Queries.map { q =>
           // sf0.1-side row count: one observed, UNMEASURED run on the
           // sweep dir (the timed sweep denominator stays untouched)
-          val (fn01, rows01f) = observedQuery(q)
+          val (fn01, rows01f) = observedQuery(q, sfDir)
           runOnce(q, fn01): Unit
           val rows01 = rows01f()
           reclaimAfter(q, keepFixtures = false)
@@ -691,7 +698,7 @@ object Bench {
           Some((false, s""""scale_decade":{"ok":false,""" +
             s""""error":"${decadeError.getOrElse("unknown")}"},"""))
         case Some((generated, rows0)) =>
-          val rowLaw = graft.tools.ProbeScaleDecade.rowLaw(10)
+          val rowLaw = ScaleDecade.rowLaw(10)
           val rows = rows0.map { r =>
             val base = resultsMap.get(r.q).filter(_ > 0)
             val over = base.exists(b => r.best < 0 || r.best / b > decadeThreshold)
@@ -727,7 +734,7 @@ object Bench {
           }.mkString("{", ",", "}")
           Some((ok, s""""scale_decade":{"ok":$ok,""" +
             s""""threshold":$decadeThreshold,""" +
-            s""""gen":"${graft.tools.ProbeScaleDecade.GenVersion}",""" +
+            s""""gen":"${ScaleDecade.GenVersion}",""" +
             s""""generated_this_run":$generated,"fixture":"$decadeFixture",""" +
             s""""queries":$qjson},"""))
       }

@@ -1,39 +1,40 @@
-package graft.tools
+package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Round-14 probe (VERDICT r13 #6): one scale decade up on the heavy
-  * family. The per-round gates measure sf0.01 → sf0.1; the 100×
-  * efficiency claims above that rest on plan shape. This probe
-  * synthesizes sf0.3 and sf1.0 slices of the heavy-family fixtures by
-  * disjoint-copy replication of sf0.1 — the same scaling semantics as
-  * the TPC-H generator (entity COUNTS grow with SF, per-entity degree
-  * stays constant) — and times c57/c104/c100/c2/c14 once per scale, so
-  * a hidden superlinear term (a driver-side collect that grows with the
-  * corpus, a join that degenerates past AQE's local thresholds) shows
-  * up as a ratio far above the data ratio.
+/** Disjoint-copy ×k fixtures for [[Bench]]'s `scale_decade` gate: one
+  * scale decade up on the heavy family. The per-round sweep measures
+  * sf0.01 → sf0.1; the efficiency claims above that rest on plan shape.
+  * [[ensureFixture]] synthesizes a ×k slice of the heavy-family fixtures
+  * by disjoint-copy replication of a base SF dir — the same scaling
+  * semantics as the TPC-H generator (entity COUNTS grow with SF,
+  * per-entity degree stays constant) — so a hidden superlinear term (a
+  * driver-side collect that grows with the corpus, a join that
+  * degenerates past AQE's local thresholds) shows up in the gate as a
+  * time ratio far above the data ratio, and a fixture or plan
+  * regression breaks the ×k row law ([[rowLaw]]).
   *
   * Replication details, chosen so the per-copy structure is EXACTLY
-  * sf0.1's:
+  * the base's:
   *   - orders/lineitem: every key column shifted by copy·(max+1) of its
   *     keyspace — the bipartite graphs (cust→supp for c57, cust↔part
   *     for c100/c104) become k disjoint copies; node and edge counts
   *     scale ×k, degrees unchanged.
-  *   - documents: doc_id shifted; text Caesar-rotated per copy (a
-  *     bijection on letters, so WITHIN-copy shingle-set Jaccard — what
-  *     c2 measures — is preserved verbatim, while cross-copy shingle
-  *     sets are disjoint: the dup-pair count scales ×k, not ×k²).
+  *   - documents: doc_id shifted; text mapped through a per-copy letter
+  *     bijection (a bijection on letters, so WITHIN-copy shingle-set
+  *     Jaccard — what c2 measures — is preserved verbatim, while
+  *     cross-copy shingle sets are disjoint: the dup-pair count scales
+  *     ×k, not ×k²).
   *   - embeddings: vec_id shifted; non-zero copies perturbed with a
-  *     copy-and-dimension-dependent term (same trick as ScaleProbe) so
-  *     the ANN corpus grows without planting exact duplicates. The c14
-  *     query set (vec_id < 10) stays fixed — the probe measures
-  *     corpus-side scaling at constant query load, the serve shape.
+  *     copy-and-dimension-dependent term so the ANN corpus grows
+  *     without planting exact duplicates. The c14 query set
+  *     (vec_id < 10) stays fixed — corpus-side scaling at constant
+  *     query load, the serve shape.
   *
-  * Usage: sbt "runMain graft.tools.ProbeScaleDecade [baseSfDir] [workRoot]"
-  * Results → stdout table; recorded in PLANS.md.
+  * Measured results are recorded in PLANS.md (rounds 14–17).
   */
-object ProbeScaleDecade {
+object ScaleDecade {
   /** The five heavy-family members of the standing per-round gate
     * ([[graft.Bench]]'s `scale_decade` block, round 15). */
   val Queries = Seq("c57_pagerank", "c104_kcore",
@@ -62,73 +63,21 @@ object ProbeScaleDecade {
   /** Generate the k× fixture at `dir` from `base` unless a fixture with
     * the current [[GenVersion]] already exists there (generation is
     * deterministic, so persisted slices are reused across rounds).
-    * `docsOnly` replicates just the documents table (the dedup-family
-    * probes read nothing else; its marker is tagged so a docs-only
-    * fixture can never satisfy a full-fixture request). Returns true if
-    * generation ran. */
-  def ensureFixture(spark: SparkSession, base: String, dir: String, k: Int,
-                    docsOnly: Boolean = false): Boolean = {
+    * Returns true if generation ran. */
+  def ensureFixture(spark: SparkSession, base: String, dir: String, k: Int): Boolean = {
     // the marker records generator version AND provenance (base, k): a
     // fixture generated from a different base SF or multiplier must
     // regenerate, not be silently reused against the wrong baseline
-    val tag = GenVersion + (if (docsOnly) "-docs" else "") + s":$base:x$k"
+    val tag = GenVersion + s":$base:x$k"
     val marker = java.nio.file.Paths.get(s"$dir/_DONE")
     val current = java.nio.file.Files.exists(marker) &&
       new String(java.nio.file.Files.readAllBytes(marker)).trim == tag
     if (current) false
     else {
-      if (docsOnly) generateDocuments(spark, base, dir, k)
-      else generate(spark, base, dir, k)
+      generate(spark, base, dir, k)
       java.nio.file.Files.write(marker, tag.getBytes)
       true
     }
-  }
-
-  def main(args: Array[String]): Unit = {
-    val base = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val root = args.lift(1).getOrElse("/tmp/graft_scale_decade")
-    val spark = graft.GraftSession.build("graft-scale-decade")
-    val scales = Seq(("sf0.1", base, 1), (s"sf0.3", s"$root/sf03", 3),
-      (s"sf1.0", s"$root/sf10", 10))
-
-    scales.drop(1).foreach { case (tag, dir, k) =>
-      if (ensureFixture(spark, base, dir, k))
-        println(s"[decade] generated $tag (${k}x) at $dir")
-      else println(s"[decade] reusing $tag at $dir")
-    }
-
-    // sanity: the scaled dirs really are k× on the scaled tables
-    scales.foreach { case (tag, dir, k) =>
-      val nl = spark.read.parquet(s"$dir/lineitem.parquet").count()
-      val nd = spark.read.parquet(s"$dir/documents.parquet").count()
-      println(s"[decade] $tag lineitem=$nl documents=$nd (expect ${600000L * k}/${5000L * k})")
-    }
-
-    val results = scala.collection.mutable.Map[(String, String), Double]()
-    Queries.foreach { q =>
-      scales.foreach { case (tag, dir, _) =>
-        def once(): Double = {
-          val t0 = System.nanoTime()
-          val df = graft.SparkEntry.queries(q)(spark, dir)
-          df.write.format("noop").mode("overwrite").save()
-          val dt = (System.nanoTime() - t0) / 1e9
-          graft.operators.Ckpt.releaseResult(df)
-          dt
-        }
-        once() // warmup: JIT + first-touch fault tax (see Bench scaladoc)
-        val t = math.min(once(), once())
-        graft.operators.Ckpt.releaseIssued(spark)
-        spark.catalog.clearCache()
-        results((q, tag)) = t
-        println(f"[decade] $q%-22s $tag%-7s ${t}%8.2f s")
-      }
-    }
-    println(f"${"query"}%-22s ${"sf0.1"}%8s ${"sf0.3"}%8s ${"sf1.0"}%8s ${"r(3x)"}%7s ${"r(10x)"}%7s")
-    Queries.foreach { q =>
-      val a = results((q, "sf0.1")); val b = results((q, "sf0.3")); val c = results((q, "sf1.0"))
-      println(f"$q%-22s $a%8.2f $b%8.2f $c%8.2f ${b / a}%7.2f ${c / a}%7.2f")
-    }
-    spark.stop()
   }
 
   /** The documents half of [[generate]]: doc_id shifted per copy, text
@@ -144,7 +93,7 @@ object ProbeScaleDecade {
     * The bijection family is the AFFINE cipher over the lowercase
     * alphabet: letter i → a·i + b (mod 26) with a coprime to 26 —
     * 12 × 26 = 312 distinct permutations, identity at copy 0 (gen v3).
-    * History, both caught by this round's sf3 probe: v1 used Caesar
+    * History, both caught by the round-15 sf3 run: v1 used Caesar
     * rotation alone (26 classes), so at k=30 copies c and c−26 shared
     * a rotation and became EXACT cross-copy duplicates — c2 read
     * 29 728 pairs against the ×k-expected 7 680, the excess
@@ -154,8 +103,8 @@ object ProbeScaleDecade {
     * lowercases before shingling (same 29 728). Case is folded to the
     * mapped lowercase on both input cases for the same reason.
     * k ≤ 312 enforced. */
-  private[tools] def generateDocuments(spark: SparkSession, base: String,
-                                       out: String, k: Int): Unit = {
+  private def generateDocuments(spark: SparkSession, base: String,
+                                out: String, k: Int): Unit = {
     require(k <= 312, s"affine letter-bijection family has 312 classes, got k=$k")
     val docs = spark.read.parquet(s"$base/documents.parquet")
     val sDoc = docs.agg(max(col("doc_id"))).head().getLong(0) + 1
@@ -174,7 +123,7 @@ object ProbeScaleDecade {
   }
 
   /** k disjoint-copy replication of the four heavy tables; the other
-    * six copied verbatim (the five probed queries only read the four,
+    * six copied verbatim (the five gate members only read the four,
     * but a uniform directory keeps Tables.load semantics identical). */
   private def generate(spark: SparkSession, base: String, out: String, k: Int): Unit = {
     def span(df: DataFrame, c: String): Long =

@@ -3,6 +3,7 @@ package graft.etl
 import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.graft.ListenerBusAccess
 import java.util.concurrent.atomic.LongAdder
 
 /** Sequential job orchestration with row accounting — the reference's
@@ -119,20 +120,14 @@ class EtlRunner(spark: SparkSession) {
             obs.get("sent").asInstanceOf[Long]
           case _ =>
             writer.save(s"$targetDir/${job.write}")
-            // listener events post asynchronously; wait for the counter
-            // to stabilize, up to a 10 s cap (public API only —
-            // listenerBus is private). Task retries can still
+            // save() returns after its jobs finish, so every TaskEnd is
+            // already POSTED to the listener bus; the bus is FIFO, so
+            // once it drains every task has been counted. On a drain
+            // timeout the count is returned as read and `balanced`
+            // reports the shortfall. Task retries can still
             // double-count (documented at-least-once accounting,
             // matching the write semantics).
-            val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
-            var prev = -1L
-            var stable = 0
-            while (stable < 3 && System.nanoTime() < deadline) {
-              val cur = written.sum()
-              if (cur == prev) stable += 1 else stable = 0
-              prev = cur
-              Thread.sleep(100)
-            }
+            ListenerBusAccess.waitUntilEmpty(spark.sparkContext, 10000): Unit
             written.sum()
         }
       } finally {

@@ -310,7 +310,7 @@ case class AdcScore(left: Expression, right: Expression, ksub: Int)
   * whole-stage-codegen method/splitting limits, so the projection
   * degrades to interpreted evaluation and the signature step alone
   * dominated its queries (measured: ~3.0 s of c14's ~4.3 s at sf0.1 on
-  * a 2 000-vector corpus — ~1000× the raw FLOPs; ProbeAnn, PLANS.md
+  * a 2 000-vector corpus — ~1000× the raw FLOPs; PLANS.md
   * round 12). Here the plane matrix ships as ONE flattened double[]
   * constant and the generated code is a triple loop over
   * (table, bit, dim) — the vector is copied to a local primitive array

@@ -694,7 +694,7 @@ object Multimodal {
     // Re-persist + re-materialize exactly as the first build did; the
     // rebuild lands once per sweep (in the bench: inside the unmeasured
     // warmup rep). Measured at sf0.1 under the bench's reclaim cadence
-    // (tools/ProbeSlow PROBE_RECLAIM=query): m8 4.1-4.5 → 1.14 s,
+    // (PLANS.md round 12, fixture self-heal): m8 4.1-4.5 → 1.14 s,
     // m9 3.1 → 0.43 s, m5 2.5 → 1.01 s on the measured reps.
     if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
       df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -756,8 +756,8 @@ object Multimodal {
     * CONTENDS across tasks, so more cores made it worse. An explicit
     * in-memory image stream removes the file round-trip without
     * touching process-global ImageIO state (`setUseCache` would leak
-    * into the host application); decoded pixels are identical —
-    * measured in tools/ProbeImageIo. Same treatment on every encode
+    * into the host application); decoded pixels are identical
+    * (OPTIMIZATION_r17.md item 5). Same treatment on every encode
     * below ([[encodeImage]], [[resize]], [[sampleFrames]]). */
   def decodeImage(payload: Array[Byte]): Option[BufferedImage] = {
     if (payload == null || payload.isEmpty) None

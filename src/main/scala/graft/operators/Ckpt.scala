@@ -188,7 +188,7 @@ object Ckpt {
     * set it). Survives executor loss at the cost of a durable write per
     * cut.
     *
-    * Known cost shape (probed round 13, tools/ProbeReliable): eager
+    * Known cost shape (PLANS.md round 13): eager
     * `Dataset.checkpoint()` on an unpersisted plan runs the result
     * stage twice — once for the eager count, once for the
     * checkpoint-file write — but shuffle map stages are REUSED, so the

@@ -413,7 +413,7 @@ object Dedup {
                   checkpointDir: Option[String] = None): DataFrame = {
     // backend per checkpointDir, shared with the Graph iterative family
     // (round 12: DISK_ONLY default, `memdisk` opt-out — A/B'd on
-    // pagerank/kcore AND on this CC loop via tools/ProbeMedoid)
+    // pagerank/kcore AND on this CC loop, PLANS.md round 12)
     val ch = new CkptChain(pairs.sparkSession, checkpointDir)
     // a failure mid-loop — including the non-convergence require below —
     // must not strand held rounds (in reliable mode: durable files with
@@ -424,8 +424,8 @@ object Dedup {
     // pair pipeline (index+prune+verify — the expensive part of every
     // c23-family query; exchange reuse recovers only the sub-shuffle
     // work). The cut relation is near-dup-PAIR-sized; the union of its
-    // blocks is trivial to recompute per iteration. Local A/B (round
-    // 12, tools/ProbeSlow, sf0.1): wash-to-mild-win (c23 best 3.62 →
+    // blocks is trivial to recompute per iteration. Local A/B (PLANS.md
+    // round 12, sf0.1): wash-to-mild-win (c23 best 3.62 →
     // 3.25 s, c90 3.34 → 2.58 across runs, noise ±0.5 s) — adopted for
     // the structural guarantee: the pair pipeline executes ONCE
     // regardless of how much of it exchange reuse happens to cover,
@@ -1071,7 +1071,7 @@ object Dedup {
     // it is checkpointed ONCE here: it is near-dup-pair-sized (bounded
     // far below the corpus), and without the cut the whole
     // index+prune+verify pipeline re-executes per consumer — measured
-    // 4.8 → ~3.3 s at sf0.1 (tools/ProbeMedoid)
+    // 4.8 → ~3.3 s at sf0.1 (PLANS.md round 12, c99 medoid)
     val detailed = Ckpt.cut(verifyJaccardDetailed(
       jaccardSurvivors(df, df, idCol, textCol, shingleN, threshold,
         sameRelation = true),

@@ -67,23 +67,43 @@ object GlobalOrder {
       sum2.map { case (src, _) => sum(col(src)).as("_gs") }
     val bounds = staged.groupBy(col("_gp")).agg(aggs.head, aggs.tail: _*)
       .orderBy("_gp").collect()
-    var rOff = 0L
-    var sOff = 0L
-    val offsets = bounds.map { r =>
-      val row = (r.getInt(0), rOff, sOff)
-      rOff += r.getLong(1)
-      if (sum2.nonEmpty && !r.isNullAt(2)) sOff += r.getLong(2)
-      row
-    }.toSeq
+      .map(r => (r.getInt(0), r.getLong(1),
+        if (sum2.nonEmpty && !r.isNullAt(2)) Some(r.getLong(2)) else None))
     import spark.implicits._
-    val offDf = offsets.toDF("_gp", "_gro", "_gso")
+    val offDf = offsets(bounds.toSeq).toDF("_gp", "_gro", "_gso")
     val joined = staged.join(broadcast(offDf), "_gp")
     val withRank = rankOut.fold(joined)(n =>
       joined.withColumn(n, (col("_glr") + col("_gro")).cast("int")))
+    // a null side means "no non-null value yet" on that side, exactly
+    // as the naive window's sum ignores nulls: an all-null local prefix
+    // carries the preceding partitions' sum, and vice versa
     val withCum = sum2.fold(withRank) { case (_, out) =>
-      withRank.withColumn(out, col("_glc") + col("_gso"))
+      withRank.withColumn(out,
+        coalesce(col("_glc") + col("_gso"), col("_glc"), col("_gso")))
     }
     withCum.drop("_gp", "_glr", "_glc", "_gro", "_gso")
+  }
+
+  /** Preceding-partition offsets from the boundary table
+    * `(partition, rows, non-null sum)`, in partition order: per
+    * partition, the rows and the sum before it. The sum stays None until
+    * a preceding partition holds a non-null value, as the naive window's
+    * running sum stays null until its first non-null input. The rank is
+    * emitted as `int` (schema parity with `row_number()`), so a relation
+    * past Int.MaxValue rows fails here instead of wrapping. */
+  private[graft] def offsets(bounds: Seq[(Int, Long, Option[Long])])
+      : Seq[(Int, Long, Option[Long])] = {
+    var rOff = 0L
+    var sOff = Option.empty[Long]
+    val out = bounds.map { case (gp, n, s) =>
+      val row = (gp, rOff, sOff)
+      rOff += n
+      s.foreach(v => sOff = Some(sOff.getOrElse(0L) + v))
+      row
+    }
+    require(rOff <= Int.MaxValue,
+      s"global rank overflows int: $rOff rows (row_number() is IntegerType)")
+    out
   }
 
   /** Global row_number() over `order` as `out` — the rank-only form. */

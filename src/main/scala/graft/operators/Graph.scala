@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * default, `spark.graft.graph.checkpointStorage=memdisk` opts back
   * into MEMORY_AND_DISK (the round-12 A/B: DISK_ONLY measured
   * flat-to-better at 8 GiB and 3 GiB heaps with 2-4× lower GC,
-  * tools/ProbeCheckpointStorage, PLANS.md) — fast, but an executor
+  * PLANS.md round 12) — fast, but an executor
   * loss mid-iteration is unrecoverable because local checkpoints have
   * no lineage fallback. `Some(dir)` switches every cut to a RELIABLE
   * `checkpoint()` into `dir` — the posture a multi-hour 100 TB
@@ -176,7 +176,7 @@ object Graph {
       // §2.4): symmetrization gives every node an in-edge, so
       // inflow's node set IS the node set and the per-round
       // nodes-left-join (one SMJ + exchange per iteration in the
-      // settled AQE plan — ProbePageRank, PLANS.md r11) is a no-op;
+      // settled AQE plan — PLANS.md round 11) is a no-op;
       // `_in` is a sum over a non-empty group, never null, so the old
       // coalesce(_in, 0) produced the identical value. Directed
       // graphs keep the left join: in-edge-free nodes must stay at
@@ -340,7 +340,7 @@ object Graph {
         // capped (c104's edge build, the dedup/LSH tiers): the cap
         // itself bounds every bucket, so the single-exchange exec is
         // skew-bounded by construction — and measured 1.19× faster
-        // than the join at sf10 (tools/ProbeGraphAB r17, min-of-4
+        // than the join at sf10 (OPTIMIZATION_r17.md item 1, min-of-4
         // interleaved: 16.94 vs 20.23 s)
         graft.plans.SelfPairsByKey
           .selfPairsByKey(deduped, Seq("i"), "e", maxBucket = maxItemDeg.toInt)
@@ -424,7 +424,7 @@ object Graph {
     // on the just-checkpointed relation — one scan-and-count job, no
     // shuffle — vs a whole degree-agg + two-semi-join + checkpoint
     // round saved whenever the budget outlives the peel. Probed at
-    // sf0.1 (ProbeKCore, PLANS.md round 12): c104's graph never
+    // sf0.1 (PLANS.md round 12): c104's graph never
     // converges inside its 8-round budget (28 686 → 5 534 directed
     // edges, still shrinking), so there the exit never fires and the
     // A/B reads as a wash (count overhead below run noise); kept for

@@ -327,8 +327,8 @@ object Similarity {
     * up front.
     *
     * Scale shape (round-12 rewrite, measured c65 2.9-3.2 → 0.8-0.9 s
-    * and c66 2.9 → 0.8-0.9 s at sf0.1, ~3.4× both — ProbeSlow,
-    * PLANS.md): ONE typed-Aggregator pass accumulates every per-dimension
+    * and c66 2.9 → 0.8-0.9 s at sf0.1, ~3.4× both — PLANS.md
+    * round 12): ONE typed-Aggregator pass accumulates every per-dimension
     * and per-cell moment into a packed d(d+1)/2 buffer — tight
     * multiply-add loops per row instead of materializing d(d+1)/2
     * struct rows per row for the exploded groupBy (same FLOPs, none of
@@ -552,7 +552,7 @@ object Similarity {
     * multi-table form every banded caller uses. Composing nTables ×
     * nBits [[srpSignature]] dot subtrees into one projection blows the
     * whole-stage-codegen limits and degrades to interpreted eval
-    * (measured ~1000× the raw FLOPs at the 48×4 config — ProbeAnn,
+    * (measured ~1000× the raw FLOPs at the 48×4 config —
     * PLANS.md round 12); the fused pass is bit-identical (generative
     * equivalence test incl. the mismatched-dim all-zero-signature
     * contract). */

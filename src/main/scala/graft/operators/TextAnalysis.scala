@@ -77,7 +77,7 @@ object TextAnalysis {
     * generative PropertySpec test against both the Spark regex and a
     * driver-side Matcher, and by the c10/c111 DuckDB oracles, whose
     * SQL still runs the regex form). Measured on the c111 segment
-    * relation at sf0.1 (tools/ProbeCodeSwitch): scoring stage
+    * relation at sf0.1 (PLANS.md round 12): scoring stage
     * 1.03 s → 0.44 s steady, 3.34 s → 0.49 s cold. */
   def langId(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     val text = lower(col(textCol))

@@ -1438,16 +1438,14 @@ object LayerC {
     // standard combiner. The rank windows are over 50-row model-sized
     // relations (declared exception to the no-global-window rule).
     "c53_rrf_fusion" -> { (s, dir) =>
-      // round 17 (VERDICT r16 #4): the lexical rank goes through the
-      // two-phase GlobalOrder rank — the input is limit(50)-bounded so
-      // the old global window was harmless, but this keeps the "No
-      // Partition Defined" single-partition WindowExec out of every
-      // declared query path uniformly
-      val lex = graft.operators.GlobalOrder.withRowNumber(
-          TextAnalysis.bm25Rank(docs(s, dir), "doc_id", "text",
-            Seq("vector", "hash", "stream"), k = 50),
-          Seq(desc("bm25"), asc("doc_id")), "rank")
-        .select(col("doc_id"), col("rank"))
+      // plain global window: the input is limit(50)-bounded, so one
+      // partition is the right plan (the two-phase GlobalOrder rank
+      // doubled c53's time for no scale benefit, OPTIMIZATION_r17.md)
+      import org.apache.spark.sql.expressions.Window
+      val lex = TextAnalysis.bm25Rank(docs(s, dir), "doc_id", "text",
+          Seq("vector", "hash", "stream"), k = 50)
+        .select(col("doc_id"), row_number()
+          .over(Window.orderBy(desc("bm25"), asc("doc_id"))).as("rank"))
       val e = embs(s, dir)
       val vec = Similarity.bruteForceKnn(e, e.filter(col("vec_id") === 0),
           "vec_id", "embedding", 50)

@@ -160,13 +160,27 @@ class EtlSpec extends AnyFunSuite {
       extract = "SELECT id, street_address, city, state, postal_code, country " +
         "FROM addresses WHERE id < 13422",
       write = "addrx", mode = "overwrite")
-    val r = new EtlRunner(spark).runJob(job, work)
+    val runner = new EtlRunner(spark)
+    val r = runner.runJob(job, work)
     assert(r.rowsSent == 13421)
     assert(r.rowsWritten == 13421)
     assert(r.balanced)
     val readBack = spark.read.parquet(s"$work/addrx")
     assert(readBack.count() == 13421)
     assert(readBack.columns.forall(c => c == c.toUpperCase))
+
+    // two back-to-back file-sink jobs of different sizes through the SAME
+    // runner: each count is exact after the listener-bus drain, and the
+    // written counter resets between jobs (a leak would over-count the
+    // second job by the first's rows)
+    val sizes = Seq("big" -> 17000, "small" -> 2500)
+    val results = runner.runAll(sizes.map { case (name, n) =>
+      job.copy(name = name, write = s"addr_$name",
+        extract = s"SELECT id, city FROM addresses WHERE id <= $n")
+    }, work)
+    assert(results.map(r => (r.name, r.rowsSent, r.rowsWritten)) ==
+      sizes.map { case (name, n) => (name, n.toLong, n.toLong) })
+    assert(spark.read.parquet(s"$work/addr_small").count() == 2500)
   }
 
   test("Dataset.observe: accounting metrics ride the write, no second pass") {
