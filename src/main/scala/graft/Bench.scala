@@ -364,10 +364,8 @@ object Bench {
       val read = () =>
         try {
           import scala.concurrent.duration._
-          scala.concurrent.Await.result(
-            scala.concurrent.Future(obs.get)(
-              scala.concurrent.ExecutionContext.global), 30.seconds)("rows")
-            .asInstanceOf[Long]
+          scala.concurrent.Await.result(obs.future, 30.seconds)
+            .getAs[Long]("rows")
         } catch { case _: Throwable =>
           try SparkEntry.queries(q)(spark, dir).count()
           catch { case _: Throwable => -1L }

@@ -1,21 +1,29 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions.{count, lit}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.graft.ListenerBusAccess
+import graft.sources.Sources
+import graft.sources.Sources.SourceSpec
+import java.util.concurrent.TimeoutException
 import java.util.concurrent.atomic.LongAdder
+import scala.concurrent.Await
+import scala.concurrent.duration._
 
 /** Sequential job orchestration with row accounting — the reference's
   * main lifecycle (`EtlMain.kt:28-37,42-62`) on Spark's execution model.
   *
   * The coroutine channel + chunked loader (`EtlMain.kt:51,72-88`)
   * disappears: scan→transform→write pipelines inside executor tasks with
-  * bounded memory, and JDBC sinks batch via the writer's `batchsize`
-  * option (2000, matching `EtlMain.kt:74`). The reference's
-  * sent/received counters (`EtlMain.kt:48-50,60-61`) map to:
+  * bounded memory. Every read and write goes through [[Sources]], which
+  * owns the format-specific options (JDBC sinks batch 2000 rows,
+  * matching `EtlMain.kt:74`). The reference's sent/received counters
+  * (`EtlMain.kt:48-50,60-61`) map to, for every sink alike:
   *  - sent: an `Observation` on the written plan (no second scan);
-  *  - received: executor task output metrics summed by a listener.
+  *  - received: executor task output metrics (`recordsWritten`, set by
+  *    the file committers and by `JdbcUtils.savePartition`) summed by a
+  *    job-group listener after the listener bus drains.
   */
 class EtlRunner(spark: SparkSession) {
 
@@ -70,7 +78,9 @@ class EtlRunner(spark: SparkSession) {
     }
 
   /** Run `extract` natively (Spark SQL over whatever views the caller
-    * registered), normalize names, project to the target schema, write. */
+    * registered), normalize names, project to the target schema, write.
+    * `job.mode` is passed to the writer as is; a mode string it does not
+    * accept fails the job before any row is written. */
   def runJob(job: EtlJob, targetDir: String,
              format: String = "parquet",
              options: Map[String, String] = Map.empty): JobResult = {
@@ -85,58 +95,33 @@ class EtlRunner(spark: SparkSession) {
 
     val obs = new Observation(s"etl_${job.name}_${System.nanoTime()}")
     val observed = projected.observe(obs, count(lit(1)).as("sent"))
+    // a jdbc target names a table, a file target a directory under targetDir
+    val target = if (format == "jdbc") job.write else s"$targetDir/${job.write}"
 
-    // accept the same mode strings DataFrameWriter.mode(String) accepts
-    val saveMode = job.mode.toLowerCase match {
-      case "append" => SaveMode.Append
-      case "overwrite" => SaveMode.Overwrite
-      case "ignore" => SaveMode.Ignore
-      case "error" | "errorifexists" | "default" => SaveMode.ErrorIfExists
-      case other => throw new IllegalArgumentException(s"unknown save mode: $other")
-    }
     written.reset()
     myStages.clear()
     spark.sparkContext.setJobGroup(myGroup, s"etl:${job.name}")
     spark.sparkContext.addSparkListener(listener)
-    val rowsWritten =
-      try {
-        val writer = observed.write
-          .mode(saveMode)
-          .format(format)
-          .options(options)
-        format match {
-          case "jdbc" =>
-            // batched inserts, 2000 rows per batch — parity with the
-            // reference's chunked loader (EtlMain.kt:74); concurrent
-            // connections bounded by partition count (pool-parity with
-            // max 5, DatabaseBean.kt:59).
-            writer.option("batchsize", "2000").option("dbtable", job.write).save()
-            // Spark's v1 JDBC writer does not populate task output
-            // metrics, so listener accounting would report 0 forever.
-            // A successful save() committed every partition, i.e. every
-            // observed row reached the database — the observed count IS
-            // the written count. Listener accounting below covers file
-            // formats only.
-            obs.get("sent").asInstanceOf[Long]
-          case _ =>
-            writer.save(s"$targetDir/${job.write}")
-            // save() returns after its jobs finish, so every TaskEnd is
-            // already POSTED to the listener bus; the bus is FIFO, so
-            // once it drains every task has been counted. On a drain
-            // timeout the count is returned as read and `balanced`
-            // reports the shortfall. Task retries can still
-            // double-count (documented at-least-once accounting,
-            // matching the write semantics).
-            ListenerBusAccess.waitUntilEmpty(spark.sparkContext, 10000): Unit
-            written.sum()
-        }
-      } finally {
-        spark.sparkContext.clearJobGroup()
-        spark.sparkContext.removeSparkListener(listener)
-      }
+    try {
+      Sources.write(observed, format, target, job.mode, options)
+      // save() returns after its jobs finish, so every TaskEnd is
+      // already POSTED to the listener bus; the bus is FIFO, so once it
+      // drains every task has been counted. On a drain timeout the count
+      // is read as is and `balanced` reports the shortfall. Task retries
+      // can still double-count (documented at-least-once accounting,
+      // matching the write semantics).
+      ListenerBusAccess.waitUntilEmpty(spark.sparkContext, 10000): Unit
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
 
-    val sent = obs.get("sent").asInstanceOf[Long]
-    JobResult(job.name, sent, rowsWritten, (System.nanoTime() - t0) / 1e9)
+    // the observation also travels the listener bus; a dropped event
+    // reports -1 sent (unbalanced) instead of hanging the run
+    val sent =
+      try Await.result(obs.future, 10.seconds).getAs[Long]("sent")
+      catch { case _: TimeoutException => -1L }
+    JobResult(job.name, sent, written.sum(), (System.nanoTime() - t0) / 1e9)
   }
 
   /** Run all jobs sequentially (reference `EtlMain.kt:28-37`), logging
@@ -161,7 +146,7 @@ object EtlRunner {
   def registerSource(spark: SparkSession, viewName: String, path: String,
                      format: String = "parquet",
                      options: Map[String, String] = Map.empty): DataFrame = {
-    val df = spark.read.format(format).options(options).load(path)
+    val df = Sources.read(spark, SourceSpec(format, path, None, options))
     df.createOrReplaceTempView(viewName)
     df
   }

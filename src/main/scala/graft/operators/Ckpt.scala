@@ -11,9 +11,8 @@ import org.apache.spark.storage.StorageLevel
   * — extracted to its own object in round 13 and taught the full block
   * LIFECYCLE, not just the cut:
   *
-  *   - '''Backends.''' `local` = `localCheckpoint` (DISK_ONLY by
-  *     default, `spark.graft.graph.checkpointStorage=memdisk` opts back
-  *     into MEMORY_AND_DISK — the round-12 A/B, see [[Graph]]);
+  *   - '''Backends.''' `local` = `localCheckpoint` on DISK_ONLY
+  *     blocks (the round-12 A/B, see [[Graph]]);
   *     `reliable` = `Dataset.checkpoint()` into the context's
   *     checkpoint dir. Local checkpoints store blocks on executors with
   *     NO lineage fallback — one executor loss mid-iteration kills the
@@ -21,7 +20,7 @@ import org.apache.spark.storage.StorageLevel
   *     `checkpointDir` to the iterative operators and gets the reliable
   *     backend (write-per-round to durable storage, survives executor
   *     loss). The two backends are value-identical by construction
-  *     (GraphSpec pins all three storage modes).
+  *     (GraphSpec pins both).
   *
   *   - '''Release.''' Before round 13 each iteration checkpointed a new
   *     relation and abandoned the previous one; blocks were only
@@ -155,30 +154,21 @@ object Ckpt {
     df
   }
 
-  /** Local (executor-block) checkpoint cut. DISK_ONLY blocks by default
-    * — serialized through the OS page cache, flat RSS (the round-12 A/B
-    * vs MEMORY_AND_DISK, numbers in PLANS.md; `memdisk` opts back in).
-    * Fast and correct, but NOT durable: no lineage fallback, so an
-    * executor loss mid-job is unrecoverable — iterative operators
+  /** Local (executor-block) checkpoint cut. DISK_ONLY blocks —
+    * serialized through the OS page cache, flat RSS (the round-12 A/B
+    * measured it flat-to-better than MEMORY_AND_DISK, numbers in
+    * PLANS.md). Fast and correct, but NOT durable: no lineage fallback,
+    * so an executor loss mid-job is unrecoverable — iterative operators
     * expose `checkpointDir` to switch to [[reliable]] for cluster runs. */
-  def local(df: DataFrame): DataFrame = track(
-    if (df.sparkSession.conf
-        .getOption("spark.graft.graph.checkpointStorage").contains("memdisk"))
-      df.localCheckpoint()
-    else df.localCheckpoint(true, StorageLevel.DISK_ONLY))
+  def local(df: DataFrame): DataFrame = localCounted(df)._1
 
   /** [[local]] that also returns the cut's row count — taken from the
     * eager checkpoint's OWN materializing job (round 17, VERDICT r16
     * #6), so convergence-checked loops pay one job per round, not a cut
-    * job plus a count job. Same backend selection as [[local]]. */
+    * job plus a count job. */
   def localCounted(df: DataFrame): (DataFrame, Long) = {
-    val level =
-      if (df.sparkSession.conf
-          .getOption("spark.graft.graph.checkpointStorage").contains("memdisk"))
-        None
-      else Some(StorageLevel.DISK_ONLY)
     val (cut, n) = org.apache.spark.sql.GraftCheckpointBridge
-      .cutCounted(df, reliable = false, level)
+      .cutCounted(df, reliable = false, Some(StorageLevel.DISK_ONLY))
     (track(cut), n)
   }
 

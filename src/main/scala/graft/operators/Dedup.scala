@@ -393,8 +393,7 @@ object Dedup {
     * with a checkpoint (the standard Spark iterative-graph pattern):
     * a LOCAL checkpoint by default (round 12: DISK_ONLY-backed via the
     * shared [[Ckpt]] hook — serialized blocks through the OS page
-    * cache, flat RSS; `spark.graft.graph.checkpointStorage=memdisk`
-    * restores memory-backed blocks; either way an executor loss
+    * cache, flat RSS; an executor loss
     * mid-iteration kills the job), or a RELIABLE `checkpoint()` when
     * `checkpointDir` is given (survives executor loss; the right
     * choice for a long-running 100 TB job, at the cost of a write to
@@ -412,8 +411,8 @@ object Dedup {
   def dupClusters(pairs: DataFrame, allNodes: DataFrame, idCol: String,
                   checkpointDir: Option[String] = None): DataFrame = {
     // backend per checkpointDir, shared with the Graph iterative family
-    // (round 12: DISK_ONLY default, `memdisk` opt-out — A/B'd on
-    // pagerank/kcore AND on this CC loop, PLANS.md round 12)
+    // (round 12: local cuts on DISK_ONLY — A/B'd against MEMORY_AND_DISK
+    // on pagerank/kcore AND on this CC loop, PLANS.md round 12)
     val ch = new CkptChain(pairs.sparkSession, checkpointDir)
     // a failure mid-loop — including the non-convergence require below —
     // must not strand held rounds (in reliable mode: durable files with
@@ -451,7 +450,8 @@ object Dedup {
       // job per propagation round instead of cut + filtered count.
       // count(when(...)) never returns null; the filtered-count fallback
       // covers a dropped listener event (the observation travels the
-      // listener bus, which sheds load by dropping)
+      // listener bus, which sheds load by dropping). The wait is bounded
+      // on the observation's own future, so a timeout parks no thread.
       val obs = org.apache.spark.sql.Observation()
       val updated = ch.cut("labels")(labels
         .join(candidates, Seq("node"), "left")
@@ -462,10 +462,8 @@ object Dedup {
       changed =
         try {
           import scala.concurrent.duration._
-          scala.concurrent.Await.result(
-            scala.concurrent.Future(obs.get)(
-              scala.concurrent.ExecutionContext.global), 60.seconds)("_chg")
-            .asInstanceOf[Long]
+          scala.concurrent.Await.result(obs.future, 60.seconds)
+            .getAs[Long]("_chg")
         } catch { case _: java.util.concurrent.TimeoutException =>
           updated.filter(col("rep") =!= col("_old")).count()
         }

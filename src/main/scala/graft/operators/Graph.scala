@@ -11,17 +11,16 @@ import org.apache.spark.sql.functions._
   *
   * Checkpoint posture (round 13 — see [[Ckpt]] for the full lifecycle):
   * every iterative member takes an optional `checkpointDir`. `None`
-  * (default) cuts lineage with LOCAL checkpoints — DISK_ONLY blocks by
-  * default, `spark.graft.graph.checkpointStorage=memdisk` opts back
-  * into MEMORY_AND_DISK (the round-12 A/B: DISK_ONLY measured
-  * flat-to-better at 8 GiB and 3 GiB heaps with 2-4× lower GC,
+  * (default) cuts lineage with LOCAL checkpoints on DISK_ONLY blocks
+  * (the round-12 A/B: DISK_ONLY measured flat-to-better than
+  * MEMORY_AND_DISK at 8 GiB and 3 GiB heaps with 2-4× lower GC,
   * PLANS.md round 12) — fast, but an executor
   * loss mid-iteration is unrecoverable because local checkpoints have
   * no lineage fallback. `Some(dir)` switches every cut to a RELIABLE
   * `checkpoint()` into `dir` — the posture a multi-hour 100 TB
   * PageRank ships with: each round persists to durable storage and the
-  * job survives executor loss. All backends are value-identical
-  * (GraphSpec pins local-disk / memdisk / reliable-dir).
+  * job survives executor loss. Both backends are value-identical
+  * (GraphSpec pins local-disk / reliable-dir).
   *
   * Superseded rounds are released as soon as their successor
   * materializes (the [[CkptChain]] contract), so a loop holds O(1)

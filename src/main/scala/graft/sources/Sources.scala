@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 /** Source/sink surface (SURVEY.md §2.2 "Scans/sources" / "Sinks").
@@ -8,8 +8,10 @@ import org.apache.spark.sql.types.StructType
   * The reference reads/writes only JDBC (`EtlMain.kt:106,87`); its DuckDB
   * and S3 dependencies signal file/object-store ambitions. Here every
   * format goes through one option-map API so ETL jobs can swap
-  * `parquet|csv|json|orc|jdbc` without code changes; object stores are
-  * path-schemes (`s3a://...`), not code.
+  * `parquet|csv|json|orc|avro|jdbc` without code changes; object stores
+  * are path-schemes (`s3a://...`), not code. This is the only module
+  * that turns a format name into a reader or writer call —
+  * `graft.etl.EtlRunner` reads and writes through it.
   *
   * Scale notes:
   *  - schema is explicit for text formats (csv/json): schema inference
@@ -63,12 +65,16 @@ object Sources {
     r.load()
   }
 
+  /** `mode` is any string `DataFrameWriter.mode(String)` accepts
+    * (`append|overwrite|ignore|error|errorifexists|default`); Spark
+    * rejects any other with `AnalysisException` before a row is written.
+    * For `jdbc`, `path` names the target table. */
   def write(df: DataFrame, format: String, path: String,
-            mode: SaveMode = SaveMode.Overwrite,
+            mode: String = "overwrite",
             options: Map[String, String] = Map.empty): Unit = {
     val w = df.write.format(provider(format)).mode(mode).options(options)
     format match {
-      case "jdbc" => w.option("batchsize", "2000").save()
+      case "jdbc" => w.option("batchsize", "2000").option("dbtable", path).save()
       case _ => w.save(path)
     }
   }

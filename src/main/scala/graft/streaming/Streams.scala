@@ -439,10 +439,7 @@ object Streams {
   private[streaming] def withHarnessPartitions[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = spark.conf.get(key)
-    // overridable for profiling and for harness runs whose single
-    // micro-batch does real aggregation work (see PLANS.md on s1)
-    val n = spark.conf.getOption("graft.streaming.harnessPartitions").getOrElse("4")
-    spark.conf.set(key, n)
+    spark.conf.set(key, "4")
     try f finally spark.conf.set(key, prev)
   }
 

@@ -16,7 +16,8 @@ import org.apache.spark.SparkContext
   * "bus empty" implies every already-posted event has been dispatched.
   * Two callers: the streaming bench reads its per-run progress/phase
   * sums after the drain, and `graft.etl.EtlRunner` reads its
-  * task-output row count after a file-sink `save()`.
+  * task-output row count after every `save()`, file and JDBC sinks
+  * alike.
   *
   * `waitUntilEmpty` is `private[spark]` test plumbing, reached from
   * the `org.apache.spark` namespace like the repo's other shims

@@ -15,7 +15,7 @@ import org.apache.spark.storage.StorageLevel
   * same `LogicalRDD.fromDataset` wrap, same action name for the SQL
   * tab) and returns the materializing count alongside the cut
   * DataFrame — one job per round instead of two. Value-identity with
-  * cut-then-count is pinned in CkptLifecycleSpec on all three backends.
+  * cut-then-count is pinned in CkptLifecycleSpec on both backends.
   */
 object GraftCheckpointBridge {
 

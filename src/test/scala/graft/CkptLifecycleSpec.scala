@@ -415,7 +415,7 @@ class CkptLifecycleSpec extends AnyFunSuite {
   // ---- round 17: counted cuts (VERDICT r16 #6) ----
 
   test("cutCounted returns the cut relation AND its row count from the " +
-    "materializing job, on all three backends") {
+    "materializing job, on both backends") {
     import graft.operators.CkptChain
     val df = (1L to 257L).toDF("v").repartition(7)
     val expect = (1L to 257L).map(Seq(_)).toSet
@@ -428,12 +428,8 @@ class CkptLifecycleSpec extends AnyFunSuite {
       ch.close()
     }
 
-    // local DISK_ONLY (default)
+    // local DISK_ONLY
     check(new CkptChain(spark, None))
-    // local MEMORY_AND_DISK (memdisk opt-in)
-    spark.conf.set("spark.graft.graph.checkpointStorage", "memdisk")
-    try check(new CkptChain(spark, None))
-    finally spark.conf.unset("spark.graft.graph.checkpointStorage")
     // reliable checkpoint-dir backend
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-").toString
     try check(new CkptChain(spark, Some(dir)))

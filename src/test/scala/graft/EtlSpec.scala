@@ -169,6 +169,12 @@ class EtlSpec extends AnyFunSuite {
     assert(readBack.count() == 13421)
     assert(readBack.columns.forall(c => c == c.toUpperCase))
 
+    // a mode string DataFrameWriter does not accept fails the job before
+    // any row is written, and leaves the runner usable
+    val bad = job.copy(name = "bad_mode", write = "addr_bad", mode = "upsert")
+    intercept[org.apache.spark.sql.AnalysisException](runner.runJob(bad, work))
+    assert(!new java.io.File(s"$work/addr_bad").exists())
+
     // two back-to-back file-sink jobs of different sizes through the SAME
     // runner: each count is exact after the listener-bus drain, and the
     // written counter resets between jobs (a leak would over-count the
@@ -181,6 +187,20 @@ class EtlSpec extends AnyFunSuite {
     assert(results.map(r => (r.name, r.rowsSent, r.rowsWritten)) ==
       sizes.map { case (name, n) => (name, n.toLong, n.toLong) })
     assert(spark.read.parquet(s"$work/addr_small").count() == 2500)
+  }
+
+  test("avro source and sink: an ETL job reads and writes avro through Sources") {
+    val work = Files.createTempDirectory("graft_etl_avro").toString
+    graft.sources.Sources.write(Generator.addresses(spark, 3000), "avro", s"$work/addresses")
+    EtlRunner.registerSource(spark, "addresses_avro", s"$work/addresses", "avro")
+    val job = EtlJob("addr_avro", "SELECT id, city FROM addresses_avro WHERE id <= 1234",
+      "addr_avro", mode = "overwrite")
+    val r = new EtlRunner(spark).runJob(job, work, format = "avro")
+    assert(r.rowsSent == 1234 && r.rowsWritten == 1234 && r.balanced)
+    val back = graft.sources.Sources.read(spark,
+      graft.sources.Sources.SourceSpec("avro", s"$work/addr_avro"))
+    assert(back.columns.toSeq == Seq("ID", "CITY"))
+    assert(back.select("ID").collect().map(_.getInt(0)).sorted.toSeq == (1 to 1234))
   }
 
   test("Dataset.observe: accounting metrics ride the write, no second pass") {

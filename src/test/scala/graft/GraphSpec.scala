@@ -178,13 +178,12 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("checkpoint backends are value-identical: default DISK_ONLY vs " +
-    "memdisk opt-out vs reliable checkpointDir") {
-    // round 12 (disk/memdisk): the ckpt hook only moves WHERE checkpoint
-    // blocks live; round 13 (reliable dir): or whether rounds persist to
-    // durable storage instead. Results must not depend on any of it.
+    "reliable checkpointDir") {
+    // round 12 (disk): the ckpt hook only moves WHERE checkpoint blocks
+    // live; round 13 (reliable dir): or whether rounds persist to
+    // durable storage instead. Results must not depend on either.
     val kedges = Seq((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L),
       (3L, 4L), (4L, 5L), (5L, 6L)).toDF("a", "b")
-    val key = "spark.graft.graph.checkpointStorage"
     def all(ck: Option[String]): Seq[Set[Seq[Any]]] = Seq(
       Graph.bfsHops(edges, "src", "dst", "a", maxHops = 10, checkpointDir = ck),
       Graph.pageRank(edges, "src", "dst", iters = 3, checkpointDir = ck),
@@ -192,14 +191,11 @@ class GraphSpec extends AnyFunSuite {
       Graph.kCoreBounded(kedges, "a", "b", k = 2, rounds = 3, checkpointDir = ck)
     ).map(_.collect().map(_.toSeq).toSet)
     val disk = all(None) // default
-    spark.conf.set(key, "memdisk")
-    val mem = try all(None) finally spark.conf.unset(key)
     val dir = java.nio.file.Files.createTempDirectory("graft-graph-ckpt-").toString
     val rel = try all(Some(dir))
       finally org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(dir))
-    for ((arms, i) <- disk.zip(mem).zip(rel).map { case ((a, b), c) => Seq(a, b, c) }.zipWithIndex) {
-      assert(arms.distinct.size == 1,
-        s"operator $i differs across checkpoint backends")
+    for (((d, r), i) <- disk.zip(rel).zipWithIndex) {
+      assert(d == r, s"operator $i differs across checkpoint backends")
     }
   }
 }

@@ -1,7 +1,8 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.sql.SaveMode
+import org.apache.spark.graft.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.functions.col
 import java.nio.file.Files
 import graft.sources.Sources
@@ -19,7 +20,7 @@ class SourcesSpec extends AnyFunSuite {
     val df = sample
     for (fmt <- Seq("parquet", "orc", "csv", "json")) {
       val opts = if (fmt == "csv") Map("header" -> "true") else Map.empty[String, String]
-      Sources.write(df, fmt, s"$work/$fmt", SaveMode.Overwrite, opts)
+      Sources.write(df, fmt, s"$work/$fmt", "overwrite", opts)
       val back = Sources.read(spark, SourceSpec(fmt, s"$work/$fmt",
         schema = if (fmt == "parquet") None else Some(df.schema), options = opts))
       assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq,
@@ -30,7 +31,7 @@ class SourcesSpec extends AnyFunSuite {
   test("xml source round-trips rows and from_xml parses nested fragments (Spark 4 built-in)") {
     val work = Files.createTempDirectory("graft_xml").toString
     val df = sample
-    Sources.write(df, "xml", s"$work/xml", SaveMode.Overwrite, Map("rowTag" -> "rec"))
+    Sources.write(df, "xml", s"$work/xml", "overwrite", Map("rowTag" -> "rec"))
     val back = Sources.read(spark, SourceSpec("xml", s"$work/xml",
       schema = Some(df.schema), options = Map("rowTag" -> "rec")))
     assert(back.orderBy("id").collect().toSeq == df.orderBy("id").collect().toSeq)
@@ -218,8 +219,24 @@ class SourcesSpec extends AnyFunSuite {
     val df = spark.range(1, 5001)
       .selectExpr("CAST(id AS INT) AS id", "concat('row_', id) AS name",
         "CAST(id AS DOUBLE) / 7 AS score")
-    Sources.write(df, "jdbc", "", SaveMode.Overwrite,
-      Map("url" -> url, "dbtable" -> "rt"))
+    // EtlRunner reports a JDBC job's written rows from task output
+    // metrics, as for file sinks. That relies on Spark's
+    // `JdbcUtils.savePartition` calling `OutputMetrics.setRecordsWritten`;
+    // a Spark upgrade that stops doing so fails here, not as every JDBC
+    // ETL job reporting itself unbalanced.
+    val sc = spark.sparkContext
+    val written = new java.util.concurrent.atomic.LongAdder
+    val listener = new SparkListener {
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null) written.add(e.taskMetrics.outputMetrics.recordsWritten)
+    }
+    assert(ListenerBusAccess.waitUntilEmpty(sc, 10000))
+    sc.addSparkListener(listener)
+    try {
+      Sources.write(df, "jdbc", "rt", "overwrite", Map("url" -> url))
+      assert(ListenerBusAccess.waitUntilEmpty(sc, 10000))
+    } finally sc.removeSparkListener(listener)
+    assert(written.sum() == 5000)
     val back = Sources.jdbc(spark, url, "rt",
       partitionColumn = Some(("id", 1L, 5000L)), numPartitions = 5)
     assert(back.rdd.getNumPartitions == 5)
